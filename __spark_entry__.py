@@ -420,10 +420,8 @@ def _ensure_ivfpq_fixture() -> str:
     shared seeded driver function (fit_kmeans_centroids — bit-stable);
     what this replicates INDEPENDENTLY is the distributed machinery the
     query runs: the unit-normalization, the first-wins argmax cell
-    assignment (replicated with fold-order dots; the query's fused Arrow
-    engine computes the same argmax via numpy GEMM — the two can differ
-    only on exact floating ties between cells, measure-zero, and the
-    sql-engine equality test pins the semantics), the driver probe
+    assignment (replicated with fold-order dots, the same order the
+    query's Arrow kernel in functions/vec.py uses), the driver probe
     selection, and the rounded-cosine top-k over the probed cells.  The
     PQ codes cannot
     affect the output at this operating point — IVFPQ_RESCORE is
@@ -1128,22 +1126,11 @@ def q_top_customers_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cosine_cols(a, b):
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    na = F.sqrt(
-        F.aggregate(F.zip_with(a, a, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
-    )
-    nb = F.sqrt(
-        F.aggregate(F.zip_with(b, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
-    )
-    return F.round(dot / (na * nb), 6)
-
-
 def q_ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-10 vs the vec_id=0 query vector — the exact
     baseline for similarity search (JVM-side: zip_with + aggregate HOFs)."""
+    from neo4j_graphrag_python_spark.operators.similarity import cosine_col
+
     emb = _read(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -1153,13 +1140,15 @@ def q_ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         emb.where(F.col("vec_id") != 0)
         .crossJoin(q)
-        .select("vec_id", _cosine_cols(F.col("v"), F.col("qv")).alias("score"))
+        .select("vec_id", cosine_col(F.col("v"), F.col("qv")).alias("score"))
     )
     return scored.orderBy(F.desc("score"), "vec_id").limit(10)
 
 
 def q_embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs cosine ≥ 0.4 (near-dup detection baseline)."""
+    from neo4j_graphrag_python_spark.operators.similarity import cosine_col
+
     emb = _read(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -1168,7 +1157,7 @@ def q_embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .select(
-            "id_a", "id_b", _cosine_cols(F.col("va"), F.col("vb")).alias("score")
+            "id_a", "id_b", cosine_col(F.col("va"), F.col("vb")).alias("score")
         )
         .where(F.col("score") >= 0.4)
     )

@@ -100,7 +100,7 @@ def split_text(
             end = adjust_chunk_end(text, start, approximate_end)
             skip_adjust_chunk_start = end == approximate_end
         else:
-            start = min(approximate_start, text_length - 1)
+            start = approximate_start
             end = min(start + chunk_size, text_length)
         spans.append((start, end, text[start:end]))
         approximate_start = start + step

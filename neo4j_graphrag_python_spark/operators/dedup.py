@@ -868,18 +868,45 @@ def embedding_neardup_exact(
     Correct at any n but quadratic; use :func:`embedding_neardup_lsh` at
     scale and assert its recall against this on a sample.
     """
+    ids = embeddings.select(F.col(id_col).alias("id"))
+    cand = ids.alias("a").join(ids.alias("b"), F.col("a.id") < F.col("b.id"))
+    return _rescored_pairs(
+        cand.select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")),
+        embeddings,
+        threshold,
+        id_col,
+        vec_col,
+    )
+
+
+def _rescored_pairs(
+    cand: DataFrame,
+    embeddings: DataFrame,
+    threshold: float,
+    id_col: str,
+    vec_col: str,
+    broadcast: bool = True,
+) -> DataFrame:
+    """Candidate (id_a, id_b) pairs → (id_a, id_b, cosine) for those whose
+    canonical fold-order :func:`cosine_col` reaches ``threshold``.
+    Vectors join back once per side; ``broadcast`` hints both (id,
+    vector) sides so no candidate row is ever exchanged carrying
+    vectors."""
     from neo4j_graphrag_python_spark.operators.similarity import cosine_col
 
-    e = embeddings.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
+    v = F.col(vec_col).cast("array<double>")
+    va = embeddings.select(F.col(id_col).alias("id_a"), v.alias("v_a"))
+    vb = embeddings.select(F.col(id_col).alias("id_b"), v.alias("v_b"))
+    if broadcast:
+        va, vb = F.broadcast(va), F.broadcast(vb)
+    return (
+        cand.join(va, "id_a")
+        .join(vb, "id_b")
+        .select(
+            "id_a", "id_b", cosine_col(F.col("v_a"), F.col("v_b")).alias("cosine")
+        )
+        .where(F.col("cosine") >= threshold)
     )
-    a, b = e.alias("a"), e.alias("b")
-    pairs = a.join(b, F.col("a.id") < F.col("b.id")).select(
-        F.col("a.id").alias("id_a"),
-        F.col("b.id").alias("id_b"),
-        cosine_col(F.col("a.v"), F.col("b.v")).alias("cosine"),
-    )
-    return pairs.where(F.col("cosine") >= threshold)
 
 
 def lsh_params_for(
@@ -948,7 +975,6 @@ def embedding_neardup_ivf(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     broadcast_rescore: bool = True,
-    rescore: str = "cells",
 ) -> DataFrame:
     """Embedding near-dup via k-means IVF cell blocking + exact cosine
     rescore — the scale path for MODERATE thresholds, where sign-LSH
@@ -973,28 +999,9 @@ def embedding_neardup_ivf(
     dropping cells — unlike the band-bucket caps, a cell is a content
     cluster, so capping it would drop precisely the duplicates.
 
-    Plan shape mirrors the LSH path's vector-free discipline: one
-    widened projection computes the probe array (JVM HOFs over one
-    array-literal codebook), the explode carries ONLY (id, cell), the
-    candidate equi-join runs on the cell key, and vectors join back once
-    per side for the rescore.  The codebook fit
-    (:func:`fit_kmeans_centroids`) is the one driver-side step —
-    codebook-sized, seeded, shared with ``ann_topk_kmeans``.
-
-    ``broadcast_rescore=True`` (default) broadcasts the (id, vector)
-    projections into the rescore joins: without the hint, Catalyst
-    sort-merges them, which means every CANDIDATE row is exchanged
-    carrying two full vectors — measured 10s of GB of shuffle spill at
-    60k×64 vectors with a 5·10⁷ candidate set, versus two 30 MB
-    broadcasts and a fully streaming rescore with it.  The hint is
-    right whenever the corpus's (id, vector) projection fits executor
-    memory (up to ~10⁷ vectors); beyond that use ``rescore="cells"``.
-
-    ``rescore="cells"`` (the default — output identical to the pairs
-    path by test, and measured 3× faster at bench scale because the
-    candidate pair set never materializes as rows and the per-pair
-    interpreted cosine folds become one numpy GEMM per cell): instead of
-    materializing candidate PAIRS at all, vectors are shipped to their
+    Plan shape: one widened projection computes the probe array (the
+    fold-order Arrow kernel :func:`vec.centroid_topn_col`), and the
+    candidate PAIRS never materialize: vectors are shipped to their
     primary cell (residents) and ``nprobe−1`` probe cells (visitors),
     and each cell group runs a tiled numpy GEMM over its members —
     resident×resident and visitor×resident scores (visitor×visitor
@@ -1003,14 +1010,21 @@ def embedding_neardup_ivf(
     margin INSIDE the kernel.  Only survivors (output-sized) reach
     a shuffle; they are deduped (a pair can surface in ≤2 cells) and
     rescored with the canonical fold-order :func:`cosine_col`, so the
-    output is identical to the pairs path.  Shuffle volume is
-    nprobe·n vector rows (linear), never the candidate pair count;
-    per-task memory is the largest cell × dim, bounded by the tile
-    loop.  Same output, asserted by test.
+    output is exactly the candidate semantics above (asserted against a
+    straight-line Python oracle in tests).  Shuffle volume is nprobe·n
+    vector rows (linear), never the candidate pair count; per-task
+    memory is the largest cell × dim, bounded by the tile loop.  The
+    codebook fit (:func:`fit_kmeans_centroids`) is the one driver-side
+    step — codebook-sized, seeded, shared with ``ann_topk_kmeans``.
+
+    ``broadcast_rescore=True`` (default) broadcasts the (id, vector)
+    projections into the final rescore joins; the hint is right whenever
+    the corpus's (id, vector) projection fits executor memory (up to
+    ~10⁷ vectors).  Beyond that pass False and the output-sized
+    survivors shuffle-join instead.
     """
+    from neo4j_graphrag_python_spark.functions import vec
     from neo4j_graphrag_python_spark.operators.similarity import (
-        _centroid_topn,
-        cosine_col,
         fit_kmeans_centroids,
         sample_vectors,
     )
@@ -1032,35 +1046,16 @@ def embedding_neardup_ivf(
     # running all num_centroids·dim dots again on the narrow scan side
     assigned = widen_for_compute(embeddings).select(
         F.col(id_col).alias("id"),
-        _centroid_topn(v, centroids, nprobe).alias("probes"),
+        vec.centroid_topn_col(v, centroids, nprobe).alias("probes"),
     ).localCheckpoint(eager=False)
     base = embeddings.select(F.col(id_col).alias("id"), v.alias("v"))
-    if rescore == "cells":
-        cand = _ivf_cell_survivors(assigned, base, threshold)
-    else:
-        prim = assigned.select("id", F.element_at("probes", 1).alias("cell"))
-        probe = assigned.select("id", F.explode("probes").alias("cell"))
-        cand = (
-            probe.withColumnRenamed("id", "id_p")
-            .join(prim.withColumnRenamed("id", "id_q"), "cell")
-            .where(F.col("id_p") != F.col("id_q"))
-            .select(
-                F.least("id_p", "id_q").alias("id_a"),
-                F.greatest("id_p", "id_q").alias("id_b"),
-            )
-            .dropDuplicates(["id_a", "id_b"])
-        )
-    va = base.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"))
-    vb = base.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"))
-    if broadcast_rescore:
-        va, vb = F.broadcast(va), F.broadcast(vb)
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a", "id_b", cosine_col(F.col("v_a"), F.col("v_b")).alias("cosine")
-        )
-        .where(F.col("cosine") >= threshold)
+    return _rescored_pairs(
+        _ivf_cell_survivors(assigned, base, threshold),
+        embeddings,
+        threshold,
+        id_col,
+        vec_col,
+        broadcast_rescore,
     )
 
 
@@ -1070,7 +1065,7 @@ def _ivf_cell_survivors(
     threshold: float,
     tile_rows: int = 4096,
 ) -> DataFrame:
-    """Per-cell GEMM candidate survivors for ``rescore="cells"``.
+    """Per-cell GEMM candidate survivors for :func:`embedding_neardup_ivf`.
 
     One vector-carrying exchange (explode probes → repartition by cell:
     nprobe·n rows, linear in the corpus), then ``applyInPandas`` per
@@ -1173,33 +1168,16 @@ def embedding_neardup_blocked_exact(
     """
     import numpy as np
 
-    from neo4j_graphrag_python_spark.operators.similarity import cosine_col
-
-    pdf = (
-        embeddings.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-        .orderBy("id")
-        .toPandas()  # Arrow path: n·dim floats, no per-row Python objects
+    from neo4j_graphrag_python_spark.operators.similarity import (
+        _broadcast_tiles,
     )
-    if pdf.empty:
+
+    prep = _broadcast_tiles(embeddings, block_rows, id_col, vec_col)
+    if prep is None:
         return embeddings.sparkSession.createDataFrame(
             [], "id_a long, id_b long, cosine double"
         )
-    ids = pdf["id"].to_numpy(dtype=np.int64)
-    mat = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-    nrm = np.linalg.norm(mat, axis=1, keepdims=True)
-    mat = mat / np.where(nrm == 0, 1.0, nrm)
-    spark = embeddings.sparkSession
-    bc = spark.sparkContext.broadcast((ids, mat))
-
-    n = len(ids)
-    nblocks = (n + block_rows - 1) // block_rows
-    tile_pairs = [(i, j) for i in range(nblocks) for j in range(i, nblocks)]
-    tiles = spark.createDataFrame(tile_pairs, "bi int, bj int").repartition(
-        min(len(tile_pairs), 4 * (spark.sparkContext.defaultParallelism or 8))
-    )
+    bc, tiles = prep
     # margin must cover BOTH float fold-order drift AND cosine_col's
     # round-to-6-decimals: a pair at raw cosine θ−4e-7 rounds UP to θ and
     # passes the exact rescore, so the prune may not drop it (measured: a
@@ -1221,21 +1199,15 @@ def embedding_neardup_blocked_exact(
                     {"id_a": bids[a0 + ii], "id_b": bids[b0 + jj]}
                 )
 
-    cand = tiles.mapInPandas(_gemm, "id_a long, id_b long")
-    v = F.col(vec_col).cast("array<double>")
-    base = embeddings.select(F.col(id_col).alias("id"), v.alias("v"))
     # survivors ≈ output size, but broadcasting the (id, vec) sides (the
     # same matrix the GEMM already broadcast) keeps the rescore streaming
     # — no survivor row is ever exchanged carrying vectors
-    va = F.broadcast(base.select(F.col("id").alias("id_a"), F.col("v").alias("v_a")))
-    vb = F.broadcast(base.select(F.col("id").alias("id_b"), F.col("v").alias("v_b")))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a", "id_b", cosine_col(F.col("v_a"), F.col("v_b")).alias("cosine")
-        )
-        .where(F.col("cosine") >= threshold)
+    return _rescored_pairs(
+        tiles.mapInPandas(_gemm, "id_a long, id_b long"),
+        embeddings,
+        threshold,
+        id_col,
+        vec_col,
     )
 
 
@@ -1281,7 +1253,7 @@ def embedding_neardup(
         n = embeddings.count()
         if n * dim <= broadcast_cells:
             for k in ("num_centroids", "nprobe", "sample_n", "centroids",
-                      "seed", "broadcast_rescore", "rescore"):
+                      "seed", "broadcast_rescore"):
                 kwargs.pop(k, None)
             return embedding_neardup_blocked_exact(
                 embeddings,
@@ -1291,13 +1263,11 @@ def embedding_neardup(
                 **kwargs,
             )
         kwargs.pop("block_rows", None)
-        # beyond the broadcast tier the rescore sides can't broadcast by
-        # definition — per-cell GEMM is the only coherent rescore there,
-        # and the final canonical rescore must SHUFFLE-join the
-        # output-sized survivors rather than broadcast the full
-        # (id, vector) projection (which is exactly what doesn't fit in
-        # this tier) — so broadcast_rescore is forced off, not defaulted
-        kwargs.setdefault("rescore", "cells")
+        # beyond the broadcast tier the final canonical rescore must
+        # SHUFFLE-join the output-sized survivors rather than broadcast
+        # the full (id, vector) projection (which is exactly what doesn't
+        # fit in this tier) — so broadcast_rescore is forced off, not
+        # defaulted
         kwargs["broadcast_rescore"] = False
         return embedding_neardup_ivf(
             embeddings,
@@ -1309,8 +1279,7 @@ def embedding_neardup(
     # strip every non-LSH kwarg so a caller's IVF/GEMM tuning knobs don't
     # make valid kwargs threshold-dependent (seed is shared: LSH takes it)
     for k in ("num_centroids", "nprobe", "sample_n", "centroids",
-              "block_rows", "rescore", "broadcast_rescore",
-              "broadcast_cells"):
+              "block_rows", "broadcast_rescore", "broadcast_cells"):
         kwargs.pop(k, None)
     return embedding_neardup_lsh(
         embeddings,
@@ -1350,8 +1319,8 @@ def embedding_neardup_lsh(
     long signatures and few tables (strong pruning); moderate thresholds
     are inherently expensive for cosine LSH and get short signatures.
 
-    Plan shape: one projection computes all L bucket ids (JVM HOF dot
-    products over a broadcast-literal plane matrix), explode to
+    Plan shape: one projection computes all L bucket ids (fold-order
+    Arrow kernel over the (L·m, dim) plane matrix), explode to
     (table, bucket), equi-join on (table, bucket) — shuffle-partitionable
     by bucket key, never an all-pairs join.  Critically, the exploded
     frame carries ONLY ``(id, tbl, bucket)``: shipping the vector through
@@ -1371,7 +1340,7 @@ def embedding_neardup_lsh(
     import random
     import warnings
 
-    from neo4j_graphrag_python_spark.operators.similarity import cosine_col
+    from neo4j_graphrag_python_spark.functions import vec
 
     p_bit = 1.0 - math.acos(max(-1.0, min(1.0, threshold))) / math.pi
     if num_planes is None and num_tables is None:
@@ -1439,48 +1408,10 @@ def embedding_neardup_lsh(
     # codegen (interpreted per element — measured 21s executor CPU at
     # 2000×58×13×64), and the L·m·dim literal matrix (~48k doubles)
     # costs seconds of driver-side analysis/codegen per query.  The
-    # numpy kernel replays the JVM fold BIT-EXACTLY: per plane,
-    # ``aggregate(zip_with(v, h, x*y), 0.0, s+x)`` is a sequential
-    # left-to-right sum over dim, so the kernel accumulates one
-    # ``acc += v[:, i] * P[:, i]`` rank-1 update per dimension — same
-    # product rounding, same addition order as the interpreted fold.
-    # Degenerate rows (null vector, length != dim, null/NaN elements)
-    # produce bucket 0 in every table, exactly like the JVM expression
-    # (null products poison the fold → every when() falls to 0).
-    import numpy as np
-    from pyspark.sql.types import ArrayType, LongType
-
-    n_planes_total = num_tables * num_planes
-    plane_arr = np.array(planes_mat, dtype=np.float64)  # (L·m, dim)
-    pow2 = (2.0 ** np.arange(num_planes)).astype(np.int64)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _bucket_ids(it: "Iterator[pd.Series]") -> "Iterator[pd.Series]":
-        for s in it:
-            vals = s.to_numpy()
-            n = len(vals)
-            ok = np.zeros(n, dtype=bool)
-            rows = []
-            for r, v_ in enumerate(vals):
-                if v_ is None:
-                    continue
-                a = np.asarray(v_, dtype=np.float64)
-                if a.shape == (dim,) and not np.isnan(a).any():
-                    ok[r] = True
-                    rows.append(a)
-            buckets = np.zeros((n, num_tables), dtype=np.int64)
-            if rows:
-                V = np.stack(rows)  # (k, dim)
-                acc = np.zeros((len(rows), n_planes_total))
-                for i in range(dim):
-                    # rank-1 update: same per-element product + running
-                    # sum order as the JVM fold
-                    acc += V[:, i : i + 1] * plane_arr[:, i]
-                bits = (acc >= 0).reshape(len(rows), num_tables, num_planes)
-                buckets[ok] = bits @ pow2
-            yield pd.Series(list(buckets))
-
-    # keys only through the explode — no vector payload; widened first:
+    # fold-order kernel (:func:`vec.sign_buckets_col`) replays the JVM
+    # fold bit-exactly, degenerate rows included.
+    #
+    # Keys only through the explode — no vector payload; widened first:
     # L·m·dim dots per row on an I/O-sized scan would pin 1-2 tasks.
     # The L-table bucket array is materialized (localCheckpoint) BEFORE
     # the explode: both sides of the bucket self-join read it (the
@@ -1491,7 +1422,9 @@ def embedding_neardup_lsh(
     # (measured: a single straggler task owning the job)
     pre = widen_for_compute(embeddings).select(
         F.col(id_col).alias("id"),
-        _bucket_ids(F.col(vec_col).cast("array<double>")).alias("tbs"),
+        vec.sign_buckets_col(
+            F.col(vec_col).cast("array<double>"), planes_mat, num_planes
+        ).alias("tbs"),
     ).localCheckpoint(eager=False)
     bucketed = pre.select(
         "id", F.posexplode("tbs").alias("tbl", "bucket")
@@ -1518,15 +1451,6 @@ def embedding_neardup_lsh(
         .dropDuplicates(["id_a", "id_b"])
     )
     # fetch vectors once per side for the exact rescore (un-exploded frame)
-    v = F.col(vec_col).cast("array<double>")
-    base = embeddings.select(F.col(id_col).alias("id"), v.alias("v"))
-    va = base.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"))
-    vb = base.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a", "id_b", cosine_col(F.col("v_a"), F.col("v_b")).alias("cosine")
-        )
-        .where(F.col("cosine") >= threshold)
+    return _rescored_pairs(
+        cand, embeddings, threshold, id_col, vec_col, broadcast=False
     )

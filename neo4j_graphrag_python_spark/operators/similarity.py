@@ -8,8 +8,8 @@ DataFrame operators, plus the scale paths a 100 TB corpus needs:
     aggregate HOFs; no Python);
   * IVF-style bucketed ANN — coarse quantization by hashed random
     hyperplane signs (LSH for cosine): probe only matching buckets, giving
-    sub-linear candidate sets at the cost of recall; implemented with
-    built-ins + one broadcast of the hyperplane matrix;
+    sub-linear candidate sets at the cost of recall; every bucket, cell
+    and PQ code comes from the fold-order kernels in functions/vec.py;
   * batched multi-query search via a broadcast join of the query set.
 """
 
@@ -18,6 +18,8 @@ from __future__ import annotations
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
+
+from neo4j_graphrag_python_spark.functions import vec
 
 
 def cosine_col(a: Column, b: Column, round_to: int | None = 6) -> Column:
@@ -49,38 +51,6 @@ def topk_bruteforce(
     return scored.orderBy(F.desc("score"), "id").limit(k)
 
 
-def _hyperplane_signs(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign bits of <v, h_i> packed into a bigint bucket id.
-
-    The plane matrix is emitted as ONE SQL array-literal expression
-    (``F.expr``) instead of m×dim individual ``F.lit`` calls: every lit is
-    a py4j driver roundtrip, and at multi-table LSH sizes (L·m·dim ≈ 10⁵
-    literals) per-literal construction burned MINUTES of driver CPU just
-    building the plan.  ``%.17e`` round-trips float64 exactly, and
-    exponent-form literals parse as DOUBLE in Spark SQL (plain decimals
-    would parse as DECIMAL).
-    """
-    rows = ",".join(
-        "array(" + ",".join(f"{float(x):.17e}" for x in h) + ")" for h in planes
-    )
-    mat = F.expr(f"array({rows})")
-    dots = F.transform(
-        mat,
-        lambda h: F.aggregate(
-            F.zip_with(vec, h, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-        ),
-    )
-    # 2^i via pow (shiftleft needs a literal bit count): exact in double
-    # for i ≤ 52, and plane counts are capped at 32
-    signed = F.transform(
-        dots,
-        lambda d, i: F.when(
-            d >= 0, F.pow(F.lit(2.0), i).cast("long")
-        ).otherwise(F.lit(0).cast("long")),
-    )
-    return F.aggregate(signed, F.lit(0).cast("long"), lambda s, x: s + x)
-
-
 def build_ann_index(
     embeddings: DataFrame,
     dim: int,
@@ -102,12 +72,11 @@ def build_ann_index(
     planes = [
         [rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(num_planes)
     ]
+    v = F.col(vec_col).cast("array<double>")
     indexed = widen_for_compute(embeddings).select(
         F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        _hyperplane_signs(F.col(vec_col).cast("array<double>"), planes).alias(
-            "bucket"
-        ),
+        v.alias("v"),
+        vec.sign_buckets_col(v, planes, num_planes)[0].alias("bucket"),
     )
     return indexed, planes
 
@@ -139,10 +108,7 @@ def topk_ann(
     import itertools
 
     num_planes = len(planes)
-    qbucket = 0
-    for i, h in enumerate(planes):
-        if sum(a * b for a, b in zip(query_vector, h)) >= 0:
-            qbucket |= 1 << i
+    qbucket = int(vec.sign_buckets([query_vector], planes, num_planes)[0, 0])
     probes = {qbucket}
     for r in range(1, probe_hamming + 1):
         for flips in itertools.combinations(range(num_planes), r):
@@ -150,10 +116,8 @@ def topk_ann(
             for f in flips:
                 b ^= 1 << f
             probes.add(b)
-    q = F.array(*[F.lit(float(x)) for x in query_vector])
     cand = indexed.where(F.col("bucket").isin(list(probes)))
-    scored = cand.select("id", cosine_col(F.col("v"), q).alias("score"))
-    return scored.orderBy(F.desc("score"), "id").limit(k)
+    return topk_bruteforce(cand, query_vector, k, "id", "v")
 
 
 # ---------------------------------------------------------------------------
@@ -243,70 +207,6 @@ def fit_kmeans_centroids(
     return [[float(x) for x in c] for c in centroids]
 
 
-def _centroid_argmax(vec: Column, centroids: list[list[float]]) -> Column:
-    """Index of the max-dot-product centroid, JVM-side.
-
-    Centroids are unit-norm, so argmax dot == argmax cosine (the |v|
-    factor is constant across centroids).  The codebook rides ONE SQL
-    array literal (the %.17e lesson from _hyperplane_signs — per-element
-    F.lit is a py4j roundtrip each).  array_position returns the FIRST
-    position of the max — the same first-wins tie rule as the fitter and
-    the offline fixture."""
-    rows = ",".join(
-        "array(" + ",".join(f"{float(x):.17e}" for x in c) + ")"
-        for c in centroids
-    )
-    mat = F.expr(f"array({rows})")
-    dots = F.transform(
-        mat,
-        lambda c: F.aggregate(
-            F.zip_with(vec, c, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda s, x: s + x,
-        ),
-    )
-    return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
-
-
-def _centroid_topn(
-    vec: Column, centroids: list[list[float]], nprobe: int
-) -> Column:
-    """Indices of the ``nprobe`` max-dot-product centroids, JVM-side,
-    ordered by (-dot, index) — the same first-wins tie rule as
-    :func:`_centroid_argmax` / ``topk_ivf_kmeans``'s driver-side probe
-    selection, so ``element_at(result, 1)`` IS the primary cell.  One
-    array-literal codebook (the %.17e lesson), one transform for the
-    dots, one bounded array_sort over k structs — no shuffle, no
-    Python."""
-    rows = ",".join(
-        "array(" + ",".join(f"{float(x):.17e}" for x in c) + ")"
-        for c in centroids
-    )
-    mat = F.expr(f"array({rows})")
-    dots = F.transform(
-        mat,
-        lambda c: F.aggregate(
-            F.zip_with(vec, c, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda s, x: s + x,
-        ),
-    )
-    idx = F.sequence(F.lit(0), F.lit(len(centroids) - 1))
-    zipped = F.zip_with(
-        dots, idx, lambda d, i: F.struct(d.alias("d"), i.alias("i"))
-    )
-    ranked = F.array_sort(
-        zipped,
-        lambda l, r: F.when(l["d"] > r["d"], F.lit(-1))
-        .when(l["d"] < r["d"], F.lit(1))
-        .otherwise((l["i"] - r["i"]).cast("int")),
-    )
-    return F.transform(
-        F.slice(ranked, 1, min(nprobe, len(centroids))),
-        lambda s: s["i"].cast("int"),
-    )
-
-
 def build_ivf_kmeans_index(
     embeddings: DataFrame,
     centroids: list[list[float]] | None = None,
@@ -320,9 +220,11 @@ def build_ivf_kmeans_index(
 
     Returns (indexed_df(id, v, bucket), centroids).  Pass precomputed
     ``centroids`` to skip fitting (e.g. the fixture's shared codebook).
-    The assignment is one codegen'd projection over the corpus — no
-    shuffle; write with :func:`write_ann_index` so probes partition-prune
-    exactly like the hyperplane index."""
+    The assignment is one projection over the corpus — the first-wins
+    max-dot cell from the fold-order Arrow kernel (centroids are
+    unit-norm, so that is the max-cosine cell), no shuffle; write with
+    :func:`write_ann_index` so probes partition-prune exactly like the
+    hyperplane index."""
     from neo4j_graphrag_python_spark.operators.dedup import widen_for_compute
 
     if centroids is None:
@@ -335,7 +237,7 @@ def build_ivf_kmeans_index(
     indexed = widen_for_compute(embeddings).select(
         F.col(id_col).alias("id"),
         v.alias("v"),
-        _centroid_argmax(v, centroids).alias("bucket"),
+        vec.centroid_argmax_col(v, centroids).alias("bucket"),
     )
     return indexed, centroids
 
@@ -353,12 +255,9 @@ def topk_ivf_kmeans(
     ``PartitionFilters: [bucket IN (...)]`` — only probed cells' files
     are read."""
     q = [float(x) for x in query_vector]
-    dots = [sum(a * b for a, b in zip(q, c)) for c in centroids]
-    probes = sorted(range(len(centroids)), key=lambda j: (-dots[j], j))[:nprobe]
-    qcol = F.array(*[F.lit(x) for x in q])
+    probes = vec.topn_first(vec.fold_dots([q], centroids), nprobe)[0].tolist()
     cand = indexed.where(F.col("bucket").isin(probes))
-    scored = cand.select("id", cosine_col(F.col("v"), qcol).alias("score"))
-    return scored.orderBy(F.desc("score"), "id").limit(k)
+    return topk_bruteforce(cand, q, k, "id", "v")
 
 
 def upsert_vectors(
@@ -498,49 +397,13 @@ def knn_join(
     other vectors return what exists (rank ≤ available neighbors).
     """
     import numpy as np
-    import pandas as pd
 
-    pdf = (
-        embeddings.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-        .orderBy("id")
-        .toPandas()
-    )
-    spark = embeddings.sparkSession
-    if pdf.empty:
-        return spark.createDataFrame(
+    prep = _broadcast_tiles(embeddings, block_rows, id_col, vec_col)
+    if prep is None:
+        return embeddings.sparkSession.createDataFrame(
             [], "id long, neighbor_id long, cosine double, rnk int"
         )
-    ids = pdf["id"].to_numpy(dtype=np.int64)
-    mat = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-    nrm = np.linalg.norm(mat, axis=1, keepdims=True)
-    mat = mat / np.where(nrm == 0, 1.0, nrm)
-    bc = spark.sparkContext.broadcast((ids, mat))
-
-    n = len(ids)
-    nblocks = (n + block_rows - 1) // block_rows
-    tile_pairs = [(i, j) for i in range(nblocks) for j in range(i, nblocks)]
-    tiles = spark.createDataFrame(tile_pairs, "bi int, bj int").repartition(
-        min(len(tile_pairs), 4 * (spark.sparkContext.defaultParallelism or 8))
-    )
-
-    def _tile_topk(scores, row_ids, col_ids):
-        """Per-row candidates within 1e-6 of the tile-local kth score."""
-        kk = min(k, scores.shape[1])
-        kth = np.partition(scores, scores.shape[1] - kk, axis=1)[
-            :, scores.shape[1] - kk
-        ]
-        # isfinite: when kk spans the whole tile the kth score IS the
-        # −inf self-diagonal, and −inf ≥ −inf−margin would emit the
-        # self-pair
-        ii, jj = np.nonzero(
-            (scores >= (kth[:, None] - 1e-6)) & np.isfinite(scores)
-        )
-        return pd.DataFrame(
-            {"id": row_ids[ii], "neighbor_id": col_ids[jj]}
-        )
+    bc, tiles = prep
 
     def _gemm(batches):
         bids, bmat = bc.value
@@ -551,15 +414,72 @@ def knn_join(
                 scores = bmat[a0:a1] @ bmat[b0:b1].T
                 if bi == bj:
                     np.fill_diagonal(scores, -np.inf)
-                yield _tile_topk(scores, bids[a0:a1], bids[b0:b1])
+                yield _tile_topk(scores, bids[a0:a1], bids[b0:b1], k)
                 if bi != bj:
                     yield _tile_topk(
-                        scores.T, bids[b0:b1], bids[a0:a1]
+                        scores.T, bids[b0:b1], bids[a0:a1], k
                     )
 
     cand = tiles.mapInPandas(
         _gemm, "id long, neighbor_id long"
     ).dropDuplicates(["id", "neighbor_id"])
+    return _ranked_neighbors(cand, embeddings, k, id_col, vec_col)
+
+
+def _broadcast_tiles(
+    embeddings: DataFrame, block_rows: int, id_col: str, vec_col: str
+):
+    """(bc, tiles) for a blocked all-pairs GEMM, or None for an empty
+    corpus: the id-ordered, L2-normalized (ids, matrix) as ONE broadcast,
+    and the (i ≤ j) pairs of ``block_rows``-row tiles as a small
+    DataFrame spread over the cluster."""
+    import numpy as np
+
+    pdf = (
+        embeddings.select(
+            F.col(id_col).alias("id"),
+            F.col(vec_col).cast("array<double>").alias("v"),
+        )
+        .orderBy("id")
+        .toPandas()  # Arrow path: n·dim floats, no per-row Python objects
+    )
+    if pdf.empty:
+        return None
+    ids = pdf["id"].to_numpy(dtype=np.int64)
+    mat = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+    nrm = np.linalg.norm(mat, axis=1, keepdims=True)
+    mat = mat / np.where(nrm == 0, 1.0, nrm)
+    spark = embeddings.sparkSession
+    bc = spark.sparkContext.broadcast((ids, mat))
+    nblocks = (len(ids) + block_rows - 1) // block_rows
+    tile_pairs = [(i, j) for i in range(nblocks) for j in range(i, nblocks)]
+    tiles = spark.createDataFrame(tile_pairs, "bi int, bj int").repartition(
+        min(len(tile_pairs), 4 * (spark.sparkContext.defaultParallelism or 8))
+    )
+    return bc, tiles
+
+
+def _tile_topk(scores, row_ids, col_ids, k: int):
+    """Per-row candidates within 1e-6 of the tile-local kth score."""
+    import numpy as np
+    import pandas as pd
+
+    kk = min(k, scores.shape[1])
+    kth = np.partition(scores, scores.shape[1] - kk, axis=1)[
+        :, scores.shape[1] - kk
+    ]
+    # isfinite: when kk spans the whole tile the kth score IS the −inf
+    # self-diagonal, and −inf ≥ −inf−margin would emit the self-pair
+    ii, jj = np.nonzero((scores >= (kth[:, None] - 1e-6)) & np.isfinite(scores))
+    return pd.DataFrame({"id": row_ids[ii], "neighbor_id": col_ids[jj]})
+
+
+def _ranked_neighbors(
+    cand: DataFrame, embeddings: DataFrame, k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, neighbor_id) candidates → the top-k per id by canonical
+    fold-order :func:`cosine_col`, ranked (rounded cosine desc,
+    neighbor_id) — the windowed all-pairs oracle's ordering."""
     v = F.col(vec_col).cast("array<double>")
     base = embeddings.select(F.col(id_col).alias("_bid"), v.alias("_bv"))
     va = F.broadcast(base.withColumnsRenamed({"_bid": "id", "_bv": "v_a"}))
@@ -628,7 +548,7 @@ def knn_join_ivf(
     assigned = widen_for_compute(embeddings).select(
         F.col(id_col).alias("id"),
         v.alias("v"),
-        _centroid_topn(v, centroids, nprobe).alias("probes"),
+        vec.centroid_topn_col(v, centroids, nprobe).alias("probes"),
     )
     member = assigned.select(
         "id",
@@ -657,16 +577,7 @@ def knn_join_ivf(
             qi = ids[q]
             self_mask = qi[:, None] == rids[None, :]
             scores = np.where(self_mask, -np.inf, scores)
-            kk = min(k, scores.shape[1])
-            kth = np.partition(scores, scores.shape[1] - kk, axis=1)[
-                :, scores.shape[1] - kk
-            ]
-            ii, jj = np.nonzero(
-                (scores >= (kth[:, None] - 1e-6)) & np.isfinite(scores)
-            )
-            out.append(
-                pd.DataFrame({"id": qi[ii], "neighbor_id": rids[jj]})
-            )
+            out.append(_tile_topk(scores, qi, rids, k))
         return pd.concat(out, ignore_index=True)
 
     cand = (
@@ -674,26 +585,7 @@ def knn_join_ivf(
         .applyInPandas(per_cell, "id long, neighbor_id long")
         .dropDuplicates(["id", "neighbor_id"])
     )
-    base = embeddings.select(F.col(id_col).alias("_bid"), v.alias("_bv"))
-    va = F.broadcast(base.withColumnsRenamed({"_bid": "id", "_bv": "v_a"}))
-    vb = F.broadcast(
-        base.withColumnsRenamed({"_bid": "neighbor_id", "_bv": "v_b"})
-    )
-    scored = (
-        cand.join(va, "id")
-        .join(vb, "neighbor_id")
-        .select(
-            "id",
-            "neighbor_id",
-            cosine_col(F.col("v_a"), F.col("v_b")).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("id", "neighbor_id", "cosine", "rnk")
-    )
+    return _ranked_neighbors(cand, embeddings, k, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -767,137 +659,30 @@ def fit_pq_codebooks(
     return books
 
 
-def _unit_norm_col(vec: Column) -> Column:
-    """Unit-normalize an array<double> column (zero vectors pass through)."""
-    n = F.sqrt(F.aggregate(vec, F.lit(0.0), lambda s, x: s + x * x))
-    return F.when(n > 0, F.transform(vec, lambda x: x / n)).otherwise(vec)
-
-
-def _codebook_literal(book: list[list[float]]) -> Column:
-    """One codebook as ONE SQL array literal (the %.17e py4j lesson)."""
-    rows = ",".join(
-        "array(" + ",".join(f"{float(x):.17e}" for x in c) + ")" for c in book
-    )
-    return F.expr(f"array({rows})")
-
-
 def assign_pq_codes(
     embeddings: DataFrame,
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    engine: str = "pandas",
-    normalize: bool = True,
-    carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Quantize every vector → (id, codes array<int>, one code per
-    subspace).  No shuffle either way; the criterion is first-wins
-    ``argmax(dot − ½|c|²)`` (the fitter's exact rule) in both engines.
-
-    ``engine="pandas"`` (default): Arrow-batched numpy — one (batch ×
-    centroids) GEMM per subspace.  This is the scale path: the
-    equivalent built-in expression is a tree of higher-order functions
+    """Quantize every unit-normalized vector → (id, codes array<int>, one
+    code per subspace).  No shuffle; the criterion is first-wins
+    ``argmax(dot − ½|c|²)``, the fitter's exact rule, evaluated by the
+    fold-order Arrow kernel (:func:`vec.pq_codes_col`).  The equivalent
+    built-in expression is a tree of higher-order functions
     (transform/aggregate/zip_with), which Spark evaluates INTERPRETED
     (HOFs are excluded from whole-stage codegen) — measured 186 s for
-    60k×64 at (m=16, k=16) vs ~2 s for the numpy GEMM.  The 10-100×
-    pandas-UDF-over-interpreted-expression rule applies exactly here
-    because the per-row work is m·k·subdim flops.
-
-    ``engine="sql"``: the pure-JVM expression path — array-literal
-    codebooks, fold-order dots — kept as the reference semantics the
-    unit tests replicate bit-for-bit.  The engines agree everywhere
-    except exact floating ties between centroids (measure-zero on real
-    data; asserted equal on random corpora in tests).
+    60k×64 at (m=16, k=16) vs ~2 s for a numpy GEMM.
 
     Store the result columnar and the ADC scan needs ~m·4 bytes per
-    vector instead of dim·4.
-
-    ``normalize=False`` quantizes the RAW input vectors (the IVF-PQ
-    residual path — residuals must not be re-normalized).  ``carry_cols``
-    names extra input columns to pass through unchanged (e.g. the coarse
-    ``bucket``), so composition doesn't need a join back."""
+    vector instead of dim·4."""
     from neo4j_graphrag_python_spark.operators.dedup import widen_for_compute
-
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    carry = list(carry_cols)
-
-    if engine == "pandas":
-        import numpy as np
-        import pandas as pd
-
-        mats = [np.asarray(b, dtype=np.float64) for b in codebooks]
-        halves = [0.5 * np.sum(c * c, axis=1) for c in mats]
-
-        def quantize(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                pts = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["v"]]
-                )
-                if normalize:
-                    nrm = np.linalg.norm(pts, axis=1, keepdims=True)
-                    pts = np.where(
-                        nrm > 0, pts / np.where(nrm == 0, 1, nrm), pts
-                    )
-                cols = []
-                for s in range(m):
-                    block = pts[:, s * sub : (s + 1) * sub]
-                    cols.append(
-                        np.argmax(block @ mats[s].T - halves[s], axis=1)
-                    )
-                codes = np.stack(cols, axis=1).astype("int32")
-                out = {"id": pdf["id"], "codes": list(codes)}
-                for c in carry:
-                    out[c] = pdf[c]
-                yield pd.DataFrame(out)
-
-        narrow = widen_for_compute(embeddings).select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-            *[F.col(c) for c in carry],
-        )
-        carry_schema = "".join(
-            f", {f.name} {f.dataType.simpleString()}"
-            for f in narrow.schema.fields
-            if f.name in carry
-        )
-        return narrow.mapInPandas(
-            quantize, f"id long, codes array<int>{carry_schema}"
-        )
-
-    if engine != "sql":
-        raise ValueError(f"unknown engine: {engine!r}")
-    raw = F.col(vec_col).cast("array<double>")
-    vn = _unit_norm_col(raw) if normalize else raw
-
-    def code_for(s: int, v: Column) -> Column:
-        mat = _codebook_literal(codebooks[s])
-        half = F.expr(
-            "array("
-            + ",".join(
-                f"{0.5 * sum(float(x) * float(x) for x in c):.17e}"
-                for c in codebooks[s]
-            )
-            + ")"
-        )
-        block = F.slice(v, s * sub + 1, sub)
-        dots = F.transform(
-            mat,
-            lambda c: F.aggregate(
-                F.zip_with(block, c, lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-        adj = F.zip_with(dots, half, lambda d, h: d - h)
-        return (F.array_position(adj, F.array_max(adj)) - 1).cast("int")
 
     return widen_for_compute(embeddings).select(
         F.col(id_col).alias("id"),
-        F.array(*[code_for(s, vn) for s in range(m)]).alias("codes"),
-        *[F.col(c) for c in carry],
+        vec.pq_codes_col(F.col(vec_col).cast("array<double>"), codebooks).alias(
+            "codes"
+        ),
     )
 
 
@@ -910,7 +695,6 @@ def build_pq_index(
     codebooks: list[list[list[float]]] | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    engine: str = "pandas",
 ):
     """Fit (or accept) PQ codebooks and quantize the corpus.
     Returns (codes_df(id, codes), codebooks)."""
@@ -922,7 +706,7 @@ def build_pq_index(
             seed=seed,
         )
     return (
-        assign_pq_codes(embeddings, codebooks, id_col, vec_col, engine),
+        assign_pq_codes(embeddings, codebooks, id_col, vec_col),
         codebooks,
     )
 
@@ -963,12 +747,8 @@ def topk_pq(
         .limit(rescore)
     )
     ids = [r["id"] for r in cand.select("id").collect()]
-    qcol = F.array(*[F.lit(x) for x in q])
-    exact = embeddings.where(F.col(id_col).isin(ids)).select(
-        F.col(id_col).alias("id"),
-        cosine_col(F.col(vec_col).cast("array<double>"), qcol).alias("score"),
-    )
-    return exact.orderBy(F.desc("score"), "id").limit(k)
+    exact = embeddings.where(F.col(id_col).isin(ids))
+    return topk_bruteforce(exact, q, k, id_col, vec_col)
 
 
 def _adc_estimate(
@@ -977,15 +757,15 @@ def _adc_estimate(
     """ADC dot-product estimate of a (unit) query against the ``codes``
     column: the per-subspace query×codeword dots are a driver-computed
     LUT riding one array literal; the estimate is one codegen-side fold
-    ``sum_s LUT[s][code_s]`` — the scan never touches vectors."""
-    m = len(codebooks)
+    ``sum_s LUT[s][code_s]`` — the scan never touches vectors.  The
+    literal is ONE ``F.expr`` (a per-element ``F.lit`` is a py4j round
+    trip each); ``%.17e`` round-trips float64 exactly, and exponent-form
+    literals parse as DOUBLE in Spark SQL (plain decimals parse as
+    DECIMAL)."""
     sub = len(codebooks[0][0])
     lut = [
-        [
-            sum(qu[s * sub + d] * c[d] for d in range(sub))
-            for c in codebooks[s]
-        ]
-        for s in range(m)
+        vec.fold_dots([qu[s * sub : (s + 1) * sub]], book)[0]
+        for s, book in enumerate(codebooks)
     ]
     lut_lit = F.expr(
         "array("
@@ -1005,14 +785,6 @@ def _adc_estimate(
     )
 
 
-def _centroid_matrix_literal(centroids: list[list[float]]) -> Column:
-    rows = ",".join(
-        "array(" + ",".join(f"{float(x):.17e}" for x in c) + ")"
-        for c in centroids
-    )
-    return F.expr(f"array({rows})")
-
-
 def build_ivfpq_index(
     embeddings: DataFrame,
     num_centroids: int = 16,
@@ -1024,7 +796,6 @@ def build_ivfpq_index(
     codebooks: list[list[list[float]]] | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    engine: str = "pandas",
 ):
     """IVF-PQ (Jégou et al. 2011 §IV): coarse k-means cells + product
     quantization of the RESIDUAL (v_unit − cell_centroid) — the true
@@ -1038,16 +809,12 @@ def build_ivfpq_index(
     dot(q, c_cell) + dot(q, residual)``, the first term exact (driver-
     side per cell), only the second quantized.
 
-    Plan shape: the whole build is ONE pass with no shuffle.  The default
-    ``engine="pandas"`` does normalize → coarse argmax → residual → codes
-    inside a single Arrow-batched numpy stage (two GEMMs per batch) —
-    measured at 60k×64/64 cells: the JVM-HOF composition took 820 s
-    (interpreted fold-dots against the cell codebook, the same
-    excluded-from-codegen trap as flat PQ's 30×), the fused numpy pass
-    seconds.  ``engine="sql"`` keeps the pure-JVM fold-order composition
-    as the reference semantics (engine equality asserted in tests; the
-    two can differ only on exact floating ties between cells/codewords,
-    measure-zero on real data).  Write partitioned by ``bucket``
+    Plan shape: the whole build is ONE pass with no shuffle: normalize →
+    coarse argmax → residual → codes inside a single fold-order Arrow
+    kernel (:func:`vec.ivfpq_col`) — measured at 60k×64/64 cells: the
+    JVM-HOF composition took 820 s (interpreted fold-dots against the
+    cell codebook, the same excluded-from-codegen trap as flat PQ's
+    30×), a fused numpy pass seconds.  Write partitioned by ``bucket``
     (:func:`write_ann_index`) and probes read only probed cells'
     (id, codes) — ~m·4 B/row of only nprobe/k of the corpus.
     """
@@ -1073,78 +840,15 @@ def build_ivfpq_index(
                 normalize=False,
             )
 
-    if engine == "pandas":
-        import numpy as np
-        import pandas as pd
+    from neo4j_graphrag_python_spark.operators.dedup import widen_for_compute
 
-        from neo4j_graphrag_python_spark.operators.dedup import (
-            widen_for_compute,
-        )
-
-        cmat = np.asarray(centroids, dtype=np.float64)
-        m_ = len(codebooks)
-        sub = len(codebooks[0][0])
-        mats = [np.asarray(b, dtype=np.float64) for b in codebooks]
-        halves = [0.5 * np.sum(c * c, axis=1) for c in mats]
-
-        def fused(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                pts = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["v"]]
-                )
-                nrm = np.linalg.norm(pts, axis=1, keepdims=True)
-                pts = np.where(nrm > 0, pts / np.where(nrm == 0, 1, nrm), pts)
-                bucket = np.argmax(pts @ cmat.T, axis=1)
-                res = pts - cmat[bucket]
-                cols = []
-                for s in range(m_):
-                    block = res[:, s * sub : (s + 1) * sub]
-                    cols.append(
-                        np.argmax(block @ mats[s].T - halves[s], axis=1)
-                    )
-                codes = np.stack(cols, axis=1).astype("int32")
-                yield pd.DataFrame(
-                    {
-                        "id": pdf["id"],
-                        "codes": list(codes),
-                        "bucket": bucket.astype("int32"),
-                    }
-                )
-
-        narrow = widen_for_compute(embeddings).select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-        coded = narrow.mapInPandas(
-            fused, "id long, codes array<int>, bucket int"
-        )
-        return coded, centroids, codebooks
-
-    if engine != "sql":
-        raise ValueError(f"unknown engine: {engine!r}")
-    vu = _unit_norm_col(F.col(vec_col).cast("array<double>"))
-    mat = _centroid_matrix_literal(centroids)
-    base = embeddings.select(
+    a = widen_for_compute(embeddings).select(
         F.col(id_col).alias("id"),
-        vu.alias("vu"),
-        _centroid_argmax(vu, centroids).alias("bucket"),
-    ).withColumn(
-        "residual",
-        F.zip_with(F.col("vu"), F.element_at(mat, F.col("bucket") + 1),
-                   lambda x, c: x - c),
+        vec.ivfpq_col(
+            F.col(vec_col).cast("array<double>"), centroids, codebooks
+        ).alias("a"),
     )
-    coded = assign_pq_codes(
-        base,
-        codebooks,
-        id_col="id",
-        vec_col="residual",
-        engine=engine,
-        normalize=False,
-        carry_cols=("bucket",),
-    )
-    return coded, centroids, codebooks
+    return a.select("id", "a.codes", "a.bucket"), centroids, codebooks
 
 
 def topk_ivfpq(
@@ -1173,14 +877,10 @@ def topk_ivfpq(
     q = [float(x) for x in query_vector]
     qn = sum(x * x for x in q) ** 0.5 or 1.0
     qu = [x / qn for x in q]
-    cell_dots = [
-        sum(a * b for a, b in zip(qu, c)) for c in centroids
-    ]
-    probes = sorted(
-        range(len(centroids)), key=lambda j: (-cell_dots[j], j)
-    )[:nprobe]
+    cell_dots = vec.fold_dots([qu], centroids)
+    probes = vec.topn_first(cell_dots, nprobe)[0].tolist()
     dots_lit = F.expr(
-        "array(" + ",".join(f"{x:.17e}" for x in cell_dots) + ")"
+        "array(" + ",".join(f"{x:.17e}" for x in cell_dots[0]) + ")"
     )
     est = F.element_at(dots_lit, F.col("bucket") + 1) + _adc_estimate(
         qu, codebooks
@@ -1192,9 +892,5 @@ def topk_ivfpq(
         .limit(rescore)
     )
     ids = [r["id"] for r in cand.select("id").collect()]
-    qcol = F.array(*[F.lit(x) for x in q])
-    exact = embeddings.where(F.col(id_col).isin(ids)).select(
-        F.col(id_col).alias("id"),
-        cosine_col(F.col(vec_col).cast("array<double>"), qcol).alias("score"),
-    )
-    return exact.orderBy(F.desc("score"), "id").limit(k)
+    exact = embeddings.where(F.col(id_col).isin(ids))
+    return topk_bruteforce(exact, q, k, id_col, vec_col)

@@ -47,10 +47,3 @@ def read_chunks(spark: SparkSession, path: str) -> DataFrame:
     embedding suppression == column pruning via .drop)."""
     return spark.read.parquet(path).orderBy("conv_id", "chunk_index")
 
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in DRIVER_TABLES}

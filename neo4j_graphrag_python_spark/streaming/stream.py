@@ -149,18 +149,3 @@ def streaming_dedup_exact(
         ["_text_hash"]
     ).drop("_text_hash")
 
-
-def streaming_turn_counts(
-    stream: DataFrame, watermark: str = "10 minutes", window: str = "5 minutes"
-) -> DataFrame:
-    """Fully-streaming stage: windowed per-conversation turn counts with a
-    watermark for late turns — append-mode compatible (used for monitoring
-    feed health; also demonstrates the watermarked-agg operator)."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), F.col("conv_id"))
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.max("turn_idx").alias("max_turn_idx"),
-        )
-    )

@@ -460,62 +460,79 @@ def test_embedding_ivf_explode_is_vector_free(spark) -> None:
             assert "embedding" not in line and ", v" not in line, line
 
 
-def test_embedding_ivf_cell_rescore_equals_pairs_path(spark) -> None:
-    """rescore="cells" (per-cell GEMM, the beyond-broadcast-tier shape:
-    candidates never exist as rows) must produce EXACTLY the pairs
-    path's output — same candidate semantics (primary(b) ∈ probes(a) ∨
-    primary(a) ∈ probes(b)), same fold-order cosine on survivors."""
+def _cos6(a, b) -> float:
+    """Fold-order cosine rounded like Spark's round(_, 6): HALF_UP on the
+    shortest decimal repr."""
+    import math
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def dot(x, y):
+        s = 0.0
+        for p, q in zip(x, y):
+            s = s + p * q
+        return s
+
+    out = dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
+    return float(
+        Decimal(repr(out)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP)
+    )
+
+
+def test_embedding_ivf_matches_straightline_oracle(spark) -> None:
+    """The per-cell GEMM path (candidates never exist as rows) equals a
+    straight-line Python oracle of the candidate semantics: probes from
+    fold-order centroid dots ordered by (-dot, index), pair (a, b) when
+    primary(b) ∈ probes(a) or primary(a) ∈ probes(b), kept when the
+    rounded fold-order cosine reaches the threshold."""
     import random
 
     from neo4j_graphrag_python_spark.operators.dedup import (
         embedding_neardup_ivf,
     )
+    from neo4j_graphrag_python_spark.operators.similarity import (
+        fit_kmeans_centroids,
+    )
 
-    for emb, thr, k, npb in [
-        (
-            spark.read.parquet(
-                "/root/testdata/sf0.001/embeddings.parquet"
-            ),
-            0.4,
-            8,
-            3,
-        ),
-        (
-            spark.createDataFrame(
-                [
-                    (
-                        i,
-                        [
-                            random.Random(i).gauss(0, 1)
-                            for _ in range(16)
-                        ],
-                    )
-                    for i in range(300)
-                ],
-                ["vec_id", "embedding"],
-            ),
-            0.5,
-            4,
-            2,
-        ),
-    ]:
-        pairs = {
+    sf = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    sf_rows = [
+        (r["vec_id"], [float(x) for x in r["embedding"]])
+        for r in sf.select("vec_id", "embedding").collect()
+    ]
+    rnd_rows = [
+        (i, [random.Random(i).gauss(0, 1) for _ in range(16)])
+        for i in range(300)
+    ]
+    for rows, thr, k, npb in [(sf_rows, 0.4, 8, 3), (rnd_rows, 0.5, 4, 2)]:
+        vecs = dict(rows)
+        cents = fit_kmeans_centroids(
+            [vecs[i] for i in sorted(vecs)], num_centroids=k
+        )
+
+        def probes(v):
+            dots = []
+            for c in cents:
+                d = 0.0
+                for x, y in zip(v, c):
+                    d += x * y
+                dots.append(d)
+            return sorted(range(k), key=lambda j: (-dots[j], j))[:npb]
+
+        pr = {i: probes(v) for i, v in vecs.items()}
+        want = set()
+        for a in vecs:
+            for b in vecs:
+                if a < b and (pr[b][0] in pr[a] or pr[a][0] in pr[b]):
+                    cos = _cos6(vecs[a], vecs[b])
+                    if cos >= thr:
+                        want.add((a, b, cos))
+        emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        got = {
             tuple(r)
             for r in embedding_neardup_ivf(
-                emb, threshold=thr, num_centroids=k, nprobe=npb
+                emb, threshold=thr, centroids=cents, nprobe=npb
             ).collect()
         }
-        cells = {
-            tuple(r)
-            for r in embedding_neardup_ivf(
-                emb,
-                threshold=thr,
-                num_centroids=k,
-                nprobe=npb,
-                rescore="cells",
-            ).collect()
-        }
-        assert cells == pairs
+        assert want and got == want
 
 
 def test_embedding_neardup_dispatcher_routes_by_noise_collision(spark) -> None:
@@ -819,10 +836,6 @@ def test_embedding_neardup_paths_handle_empty_corpus(spark) -> None:
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
     assert embedding_neardup_blocked_exact(empty, threshold=0.4).count() == 0
     assert embedding_neardup_ivf(empty, threshold=0.4).count() == 0
-    assert (
-        embedding_neardup_ivf(empty, threshold=0.4, rescore="cells").count()
-        == 0
-    )
     assert embedding_neardup(empty, dim=4, threshold=0.4).count() == 0
     assert embedding_neardup(empty, dim=4, threshold=0.95).count() == 0
 
@@ -837,14 +850,14 @@ def test_dispatcher_kwargs_not_threshold_dependent(spark) -> None:
     dim = len(emb.select("embedding").head()["embedding"])
     knobs = dict(
         num_centroids=8, nprobe=2, sample_n=256, seed=1,
-        block_rows=2048, rescore="pairs", broadcast_rescore=True,
+        block_rows=2048, broadcast_rescore=True,
         broadcast_cells=50_000_000,
     )
     # high threshold → LSH route must tolerate IVF/GEMM knobs
     assert embedding_neardup(emb, dim=dim, threshold=0.95, **knobs).count() >= 0
     # moderate threshold, broadcast tier → blocked-exact route ditto
     assert embedding_neardup(emb, dim=dim, threshold=0.4, **knobs).count() >= 0
-    # beyond-broadcast tier: rescore must be forced to the cells shape
-    # with a shuffle-join rescore (broadcast_rescore pinned False)
+    # beyond-broadcast tier: the IVF route with a shuffle-join rescore
+    # (broadcast_rescore pinned False)
     small = dict(knobs, broadcast_cells=1)
     assert embedding_neardup(emb, dim=dim, threshold=0.4, **small).count() >= 0

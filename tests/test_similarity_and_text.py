@@ -920,6 +920,30 @@ def test_pq_fit_is_deterministic_and_shaped() -> None:
         fit_pq_codebooks(sample, m=5)
 
 
+def _pq_replicate(v, books, normalize=True):
+    """Straight-line PQ assignment: fold-order norm and dots, first-wins
+    argmax(dot − ½|c|²) per subspace."""
+    n = 0.0
+    for x in v:
+        n += x * x
+    n = n**0.5
+    vn = [x / n for x in v] if normalize and n > 0 else list(v)
+    out = []
+    for s, book in enumerate(books):
+        sub = len(book[0])
+        block = vn[s * sub : (s + 1) * sub]
+        best, best_adj = 0, None
+        for j, c in enumerate(book):
+            d = 0.0
+            for x, y in zip(block, c):
+                d += x * y
+            adj = d - 0.5 * sum(float(y) * float(y) for y in c)
+            if best_adj is None or adj > best_adj:
+                best, best_adj = j, adj
+        out.append(best)
+    return out
+
+
 def test_pq_codes_match_fold_order_replication(spark) -> None:
     import random as _r
 
@@ -936,31 +960,9 @@ def test_pq_codes_match_fold_order_replication(spark) -> None:
     )
     got = {
         r["id"]: list(r["codes"])
-        for r in assign_pq_codes(df, books, engine="sql").collect()
+        for r in assign_pq_codes(df, books).collect()
     }
-
-    def replicate(v):
-        n = 0.0
-        for x in v:
-            n += x * x
-        n = n**0.5
-        vn = [x / n for x in v] if n > 0 else list(v)
-        out = []
-        for s, book in enumerate(books):
-            sub = len(book[0])
-            block = vn[s * sub : (s + 1) * sub]
-            best, best_adj = 0, None
-            for j, c in enumerate(book):
-                d = 0.0
-                for x, y in zip(block, c):
-                    d += x * y
-                adj = d - 0.5 * sum(float(y) * float(y) for y in c)
-                if best_adj is None or adj > best_adj:
-                    best, best_adj = j, adj
-            out.append(best)
-        return out
-
-    assert got == {i: replicate(v) for i, v in vecs.items()}
+    assert got == {i: _pq_replicate(v, books) for i, v in vecs.items()}
 
 
 def test_pq_code_tie_is_first_wins(spark) -> None:
@@ -968,12 +970,11 @@ def test_pq_code_tie_is_first_wins(spark) -> None:
         assign_pq_codes,
     )
 
-    # duplicate centroids → exact tie → both engines pick the FIRST
+    # duplicate centroids → exact tie → the FIRST wins
     books = [[[1.0, 0.0], [1.0, 0.0], [0.0, 1.0]]]
     df = spark.createDataFrame([(1, [1.0, 0.0])], ["vec_id", "embedding"])
-    for engine in ("sql", "pandas"):
-        out = assign_pq_codes(df, books, engine=engine).collect()
-        assert list(out[0]["codes"]) == [0], engine
+    out = assign_pq_codes(df, books).collect()
+    assert list(out[0]["codes"]) == [0] == _pq_replicate([1.0, 0.0], books)
 
 
 def test_pq_topk_lossless_at_rescore_on_clustered(spark) -> None:
@@ -1066,10 +1067,10 @@ def test_ivfpq_recall_with_narrow_probe_on_clustered(spark) -> None:
     assert len(got & true) >= 8  # ≥0.8 recall on a cleanly clustered corpus
 
 
-def test_ivfpq_engines_agree_and_carry_bucket(spark) -> None:
-    """pandas (Arrow GEMM) and sql (fold-order HOF) residual quantizers
-    must emit identical (id, bucket, codes) given shared centroids and
-    codebooks — same engine-equality contract as flat PQ."""
+def test_ivfpq_codes_match_replication_and_carry_bucket(spark) -> None:
+    """The residual quantizer emits (id, codes, bucket) equal to a
+    straight-line replication given shared centroids and codebooks:
+    fold-order unit norm, first-wins fold-dot cell, residual PQ codes."""
     import random as _r
 
     from neo4j_graphrag_python_spark.operators.similarity import (
@@ -1084,19 +1085,30 @@ def test_ivfpq_engines_agree_and_carry_bucket(spark) -> None:
     _, cents, books = build_ivfpq_index(
         df, num_centroids=3, m=4, pq_centroids=6, sample_n=80
     )
+    coded, _, _ = build_ivfpq_index(df, centroids=cents, codebooks=books)
+    got = {
+        r["id"]: (r["bucket"], list(r["codes"])) for r in coded.collect()
+    }
 
-    def snap(engine):
-        coded, _, _ = build_ivfpq_index(
-            df, centroids=cents, codebooks=books, engine=engine
-        )
-        return {
-            r["id"]: (r["bucket"], list(r["codes"]))
-            for r in coded.collect()
-        }
+    def replicate(v):
+        import math
 
-    a, b = snap("pandas"), snap("sql")
-    assert a == b
-    assert set(v[0] for v in a.values()) <= {0, 1, 2}
+        n = 0.0
+        for x in v:
+            n += x * x
+        vu = [x / math.sqrt(n) for x in v]
+        dots = []
+        for c in cents:
+            d = 0.0
+            for x, y in zip(vu, c):
+                d += x * y
+            dots.append(d)
+        cell = dots.index(max(dots))  # first-wins
+        res = [x - y for x, y in zip(vu, cents[cell])]
+        return cell, _pq_replicate(res, books, normalize=False)
+
+    assert got == {i: replicate(v) for i, v in rows}
+    assert set(v[0] for v in got.values()) <= {0, 1, 2}
 
 
 def test_pq_topk_rescore_smaller_than_k(spark) -> None:
@@ -1136,10 +1148,10 @@ def test_pq_rescore_pushes_in_filter_to_scan(spark, tmp_path) -> None:
     assert len(out.collect()) == 5
 
 
-def test_pq_pandas_engine_matches_sql_engine(spark) -> None:
-    """The Arrow/numpy scale path and the JVM reference path agree on
-    every code (they share the argmax(dot − ½|c|²) criterion; float ties
-    between distinct centroids are measure-zero on random data)."""
+def test_pq_codes_match_replication_on_gaussian_corpus(spark) -> None:
+    """Every code of a 200-vector gaussian corpus equals the
+    straight-line replication (float ties between distinct centroids are
+    measure-zero here, so this checks the arithmetic, not the tie rule)."""
     import random as _r
 
     from neo4j_graphrag_python_spark.operators.similarity import (
@@ -1153,17 +1165,11 @@ def test_pq_pandas_engine_matches_sql_engine(spark) -> None:
     ]
     books = fit_pq_codebooks([v for _, v in rows], m=4, num_centroids=8)
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    a = {
+    got = {
         r["id"]: list(r["codes"])
-        for r in assign_pq_codes(df, books, engine="pandas").collect()
+        for r in assign_pq_codes(df, books).collect()
     }
-    b = {
-        r["id"]: list(r["codes"])
-        for r in assign_pq_codes(df, books, engine="sql").collect()
-    }
-    assert a == b
-    with pytest.raises(ValueError):
-        assign_pq_codes(df, books, engine="nope").collect()
+    assert got == {i: _pq_replicate(v, books) for i, v in rows}
 
 
 def test_linear_quality_classifier_matches_straightline(spark) -> None:
